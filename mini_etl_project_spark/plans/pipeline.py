@@ -47,6 +47,12 @@ caller's terminal action. At 100 TB additionally switch ``exact_stats``
 off — medians/percentiles go approximate (partial-aggregable, no exact
 sort-based percentile state) — and the data plane is unchanged.
 
+The constructor takes six options (thresholds, ``exact_stats``,
+``eager_summary``, ``assume_partitioned``, ``profile_sample_mod``); the
+rest is fixed: numeric columns take the reference-compatible cleaner, the
+stats jobs always read a persisted base, and the dedup keys on the full
+row.
+
 The persisted cleaned-base projection is tracked class-level: a new
 ``transform()`` releases the previous pipeline's cache, and ``release()``
 frees it explicitly, so repeated runs never accumulate cached plans.
@@ -56,6 +62,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -70,7 +77,6 @@ from mini_etl_project_spark.plans.profile import (
     DATE,
     NUMERIC,
     ColumnProfile,
-    profile_frame_and_count,
 )
 
 _V = "__etl_value"
@@ -102,17 +108,13 @@ class AutoETLPipeline:
 
     def __init__(
         self,
-        compat: bool = True,
         missing_threshold: float = 0.8,
         outlier_z: float = 3.0,
         exact_stats: bool = True,
         eager_summary: bool = True,
-        cache_intermediate: bool = True,
         assume_partitioned: bool = False,
         profile_sample_mod: int | None = None,
-        dedup_digest: bool = False,
     ) -> None:
-        self.compat = compat
         self.missing_threshold = missing_threshold
         self.outlier_z = outlier_z
         self.exact_stats = exact_stats
@@ -138,24 +140,10 @@ class AutoETLPipeline:
         # session.load_table — which widens degenerate scans itself — can
         # declare that and skip the re-probe.
         self.assume_partitioned = assume_partitioned
-        # R17 dedup key strategy (VERDICT r10 ask #3). False (default):
-        # plain dropDuplicates() — the exchange and both hash-agg levels
-        # key on the full wide row. True: key on a 16-byte md5 digest of
-        # the row instead, so partial/final agg hashing and equality
-        # compare 16 bytes rather than every column. Survivor-set parity
-        # is exact: to_json keeps field names (null patterns cannot
-        # collide across columns) and numeric -0.0 is normalized to 0.0
-        # before hashing to mirror dropDuplicates' float normalization.
-        # Collision risk: md5 is 128-bit — P(any collision) at n rows is
-        # ~n²/2^129; at 10^12 rows (beyond 100 TB of this data) that is
-        # ~10^-15, far below any hardware-error floor. Measurement:
-        # SCALE_VALIDATION.md round-11 "digest-dedup experiment".
-        self.dedup_digest = dedup_digest
-        # The stats jobs (2–5) all re-evaluate the raw scan + cleaning
-        # expressions; persisting the input across them trades memory/disk
-        # for repeated parse work. MEMORY_AND_DISK, so it degrades to
-        # spill (not OOM) at scale; switch off for one-pass-budget runs.
-        self.cache_intermediate = cache_intermediate
+        # Cleaning always takes the reference-compatible numeric cleaner
+        # (clean_numeric(compat=True)), and the R17 dedup always keys on
+        # the full row: a 16-byte md5 row-digest key measured slower at
+        # sfx10 (SCALE_VALIDATION.md round 11, "digest-dedup experiment").
         self.column_types: dict[str, str] = {}
         self.cleaning_report: dict[str, list[str]] = {"global": []}
         self.data_summary: dict[str, Any] = {}
@@ -186,8 +174,8 @@ class AutoETLPipeline:
 
     # Cached cleaned-base projections live here so sequential pipelines
     # (bench loops, notebook re-runs) never accumulate cached plans: each
-    # transform() releases every earlier pipeline's cache. Concurrent
-    # pipelines on one session should set cache_intermediate=False.
+    # transform() releases every earlier pipeline's cache, so pipelines
+    # on one session must not run concurrently.
     _LIVE_CACHES: list[DataFrame] = []
 
     def release(self) -> None:
@@ -267,9 +255,7 @@ class AutoETLPipeline:
                 F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(k))
                 == 0
             )
-            profiles, sample_rows = profile_frame_and_count(
-                sample, exact_distinct=False
-            )
+            profiles, sample_rows = profile_frame_and_count(sample)
             if sample_rows == 0:
                 # degenerate tiny input: fall back to the exact profile
                 sampled_profile = False
@@ -287,37 +273,34 @@ class AutoETLPipeline:
             types = {c: profiles[c].logical_type for c in df.columns}
             wide, parsed = prepare_parse_frame(
                 df,
-                compat=self.compat,
                 date_cols={c for c, t in types.items() if t == DATE},
                 numeric_cols={c for c, t in types.items() if t == NUMERIC},
             )
         else:
-            wide, parsed = prepare_parse_frame(df, compat=self.compat)
-        if self.cache_intermediate:
-            from pyspark import StorageLevel
-
-            # blocking=True: a lazily-evicted predecessor cache competes
-            # for executor memory with THIS run's jobs — measured 5-15 s
-            # run-to-run jitter at sf0.1 from the resulting GC churn;
-            # blocking eviction holds a steady ~5 s. The wait itself is
-            # block-drop bookkeeping, not I/O.
-            for cached in AutoETLPipeline._LIVE_CACHES:
-                cached.unpersist(blocking=True)
-            AutoETLPipeline._LIVE_CACHES.clear()
-            # Under a sampled profile the types are already known, so
-            # nothing downstream ever reads the wide frame directly — the
-            # cleaned base (one narrow column per input column) is the
-            # only consumer. Persist THAT below instead of the wide
-            # raw+parse-layer projection (guide §5: cache only what the
-            # downstream jobs actually read — r13; the wide persist
-            # carried every raw string twice and re-evaluated the text
-            # cleaners on every downstream job). The exact-profile path
-            # keeps the wide persist: the profile job must materialize
-            # the parse layers before any type is known.
-            if not sampled_profile:
-                wide = wide.persist(StorageLevel.MEMORY_AND_DISK)
-                AutoETLPipeline._LIVE_CACHES.append(wide)
-                self._cached_base = wide
+            wide, parsed = prepare_parse_frame(df)
+        # blocking=True: a lazily-evicted predecessor cache competes for
+        # executor memory with THIS run's jobs — measured 5-15 s
+        # run-to-run jitter at sf0.1 from the resulting GC churn; blocking
+        # eviction holds a steady ~5 s. The wait itself is block-drop
+        # bookkeeping, not I/O.
+        for cached in AutoETLPipeline._LIVE_CACHES:
+            cached.unpersist(blocking=True)
+        AutoETLPipeline._LIVE_CACHES.clear()
+        # The stats jobs all re-read the cleaned base, so it is persisted
+        # (MEMORY_AND_DISK: degrades to spill, not OOM, at scale). Under a
+        # sampled profile the types are already known, so nothing
+        # downstream ever reads the wide frame directly — the cleaned base
+        # (one narrow column per input column) is the only consumer.
+        # Persist THAT below instead of the wide raw+parse-layer
+        # projection (guide §5: cache only what the downstream jobs
+        # actually read — r13; the wide persist carried every raw string
+        # twice and re-evaluated the text cleaners on every downstream
+        # job). The exact-profile path keeps the wide persist: the profile
+        # job must materialize the parse layers before any type is known.
+        if not sampled_profile:
+            wide = wide.persist(StorageLevel.MEMORY_AND_DISK)
+            AutoETLPipeline._LIVE_CACHES.append(wide)
+            self._cached_base = wide
 
         if not sampled_profile:
             # Job 1: profile → logical types (+ total rows, same job); the
@@ -347,7 +330,7 @@ class AutoETLPipeline:
                 base_exprs[c] = (
                     F.col(NC_PREFIX + c)
                     if c in pset
-                    else clean_numeric(c, compat=self.compat)
+                    else clean_numeric(c, compat=True)
                 )
             elif t == DATE:
                 base_exprs[c] = (
@@ -358,9 +341,7 @@ class AutoETLPipeline:
             else:  # text and unknown both take the text cleaner (:255-256)
                 base_exprs[c] = clean_text(c, collapse_whitespace=False)
         base_df = wide.select(*[expr.alias(c) for c, expr in base_exprs.items()])
-        if self.cache_intermediate and sampled_profile:
-            from pyspark import StorageLevel
-
+        if sampled_profile:
             base_df = base_df.persist(StorageLevel.MEMORY_AND_DISK)
             AutoETLPipeline._LIVE_CACHES.append(base_df)
             self._cached_base = base_df
@@ -515,10 +496,9 @@ class AutoETLPipeline:
             else:
                 leftover.append(c)
         if leftover:
-            _, extra = self._category_and_mode_stats(
-                base_df, {}, {c: cleaned[c] for c in leftover}
+            top1.update(
+                self._mode_stats(base_df, {c: cleaned[c] for c in leftover})
             )
-            top1.update(extra)
 
         # Rare-value merge (:114-124) over the collected counts.
         threshold = max(2, 0.01 * n_rows)  # :117
@@ -668,26 +648,7 @@ class AutoETLPipeline:
         observed = base_df.observe(self._observation, *obs_metrics)
         projected = observed.select(*[imputed[c].alias(c) for c in kept])
         self._pre_dedup = projected
-        if self.dedup_digest:
-            # Dedup on a 16-byte row digest instead of the wide row (see
-            # __init__). -0.0 → 0.0 on numerics mirrors dropDuplicates'
-            # float normalization; NaN renders stably as "NaN" in
-            # to_json, and null fields are dropped WITH their names, so
-            # the encoding stays injective per schema.
-            fields = []
-            for c in kept:
-                col = F.col(c)
-                if self.column_types[c] == NUMERIC:
-                    col = F.when(col == 0.0, F.lit(0.0)).otherwise(col)
-                fields.append(col.alias(c))
-            digest = F.unhex(F.md5(F.to_json(F.struct(*fields))))
-            result = (
-                projected.withColumn("__row_digest", digest)
-                .dropDuplicates(["__row_digest"])
-                .drop("__row_digest")
-            )
-        else:
-            result = projected.dropDuplicates()
+        result = projected.dropDuplicates()
 
         if self.eager_summary:
             self.create_data_summary(result)  # job 6; also fills the observation
@@ -714,15 +675,6 @@ class AutoETLPipeline:
                 )
 
     # -- helpers (one job each) --------------------------------------------
-
-    def _profile_with_count(
-        self, df: DataFrame
-    ) -> tuple[dict[str, ColumnProfile], int]:
-        # HLL distincts always: the type rules compare the distinct count
-        # against coarse thresholds (50 / 30 % ratio), where HLL's ~2 %
-        # error is immaterial — and the exact path costs a whole extra
-        # expression-free job (multi-column COUNT(DISTINCT) → Expand).
-        return profile_frame_and_count(df, exact_distinct=False)
 
     def _pre_stats_aggs(
         self,
@@ -756,18 +708,39 @@ class AutoETLPipeline:
                 # validates the speculation; any disagreement falls back
                 # to the dedicated exact job (same values, one extra
                 # rare job — identical to the median-gating contract).
-                qs = F.array(F.lit(0.05), F.lit(0.95))
-                quant = (
-                    F.percentile(expr, qs)
-                    if self.exact_stats
-                    else F.percentile_approx(expr, qs)
-                )
-                aggs += [
-                    F.avg(expr).alias(f"{c}__omu"),
-                    F.stddev_samp(expr).alias(f"{c}__osd"),
-                    quant.alias(f"{c}__oq"),
-                ]
+                aggs += self._outlier_aggs(c, expr)
         return aggs
+
+    def _outlier_aggs(self, c: str, expr: Column) -> list[Column]:
+        """The clamp's scalars for one column — mean, stddev_samp (pandas
+        ddof=1) and the 0.05/0.95 percentiles (exact, or approximate when
+        ``exact_stats`` is off) — aliased for ``_outlier_scalars``."""
+        qs = F.array(F.lit(0.05), F.lit(0.95))
+        quant = (
+            F.percentile(expr, qs)
+            if self.exact_stats
+            else F.percentile_approx(expr, qs)
+        )
+        return [
+            F.avg(expr).alias(f"{c}__omu"),
+            F.stddev_samp(expr).alias(f"{c}__osd"),
+            quant.alias(f"{c}__oq"),
+        ]
+
+    @staticmethod
+    def _outlier_scalars(d: dict, cols) -> dict[str, tuple]:
+        """(mean, stddev, q05, q95) per column from ``_outlier_aggs``
+        results."""
+        out: dict[str, tuple] = {}
+        for c in cols:
+            q = d.get(f"{c}__oq")
+            out[c] = (
+                d.get(f"{c}__omu"),
+                d.get(f"{c}__osd"),
+                q[0] if q else None,
+                q[1] if q else None,
+            )
+        return out
 
     @staticmethod
     def _split_pre_stats(
@@ -809,18 +782,7 @@ class AutoETLPipeline:
         ``spec_out_stats`` maps each ``spec_outlier`` column to its ridden
         (mean, stddev, q05, q95) scalars."""
         aggs = self._pre_stats_aggs(base, profiles, skip_median, spec_outlier)
-
-        def out_stats(d: dict) -> dict[str, tuple]:
-            out: dict[str, tuple] = {}
-            for c in spec_outlier or ():
-                q = d.get(f"{c}__oq")
-                out[c] = (
-                    d.get(f"{c}__omu"),
-                    d.get(f"{c}__osd"),
-                    q[0] if q else None,
-                    q[1] if q else None,
-                )
-            return out
+        spec_outlier = spec_outlier or set()
 
         stacked_cols: dict[str, Column] = {c: base[c] for c in cat_cols}
         for c in spec_date:
@@ -842,7 +804,7 @@ class AutoETLPipeline:
                 {},
                 {},
                 rows_total,
-                out_stats(row.asDict()),
+                self._outlier_scalars(row.asDict(), spec_outlier),
             )
 
         from pyspark.sql import Observation
@@ -878,102 +840,43 @@ class AutoETLPipeline:
             by_col,
             spec_top1,
             rows_total,
-            out_stats(obs.get),
+            self._outlier_scalars(obs.get, spec_outlier),
         )
 
-    def _category_and_mode_stats(
-        self,
-        df: DataFrame,
-        cat_base: dict[str, Column],
-        mode_cols: dict[str, Column],
-    ) -> tuple[dict[str, list[tuple[str, int]]], dict[str, str]]:
-        """One stacked groupBy job serving the rare-value merge AND the
-        mode fills: every (value, count) row for categorical columns
-        (bounded — the profiler types a column categorical only under ~50
-        distincts), top-1-by-(count desc, value asc) rows for the rest
-        (high-cardinality text/date columns never ship their full counts
-        to the driver). Returns ({cat_col: [(value, count), ...]},
-        {mode_col: top_value})."""
-        if not cat_base and not mode_cols:
-            return {}, {}
-        stacked_cols = {**cat_base, **mode_cols}
-        counted = (
-            _stacked(df, stacked_cols)
+    def _mode_stats(
+        self, df: DataFrame, mode_cols: dict[str, Column]
+    ) -> dict[str, str]:
+        """The dedicated mode job for columns whose cardinality dodged
+        speculation (by construction HIGH-distinct columns): one stacked
+        groupBy, then top-1-by-(count desc, value asc) per column as an
+        AGGREGATE, ``min(struct(-count, value))``, which compares fields
+        lexicographically and so selects exactly the speculated window's
+        rn=1 row. A window would sort every (value, count) row of a label
+        inside ONE partition (partitionBy label — a 400k-row single-task
+        sort for a 600k-row text column at sf0.1, measured ~1.9 s); the
+        agg form is partial-aggregable map-side and never materializes a
+        per-label sort (guide §2.3 "aggregate before you shuffle").
+        Returns {mode_col: top_value}."""
+        rows = (
+            _stacked(df, mode_cols)
             .filter(F.col(_V).isNotNull())
             .groupBy(_C, _V)
             .count()
-        )
-        if not cat_base:
-            # Mode-only call (the dedicated fallback job for columns whose
-            # cardinality dodged speculation — by construction HIGH-distinct
-            # columns): top-1-by-(count desc, value asc) as an AGGREGATE,
-            # `min(struct(-count, value))`, which compares fields
-            # lexicographically and so selects exactly the window's rn=1
-            # row. The window form sorted every (value, count) row of a
-            # label inside ONE partition (partitionBy label — a 400k-row
-            # single-task sort for a 600k-row text column at sf0.1,
-            # measured ~1.9 s); the agg form is partial-aggregable
-            # map-side and never materializes a per-label sort (guide
-            # §2.3 "aggregate before you shuffle").
-            rows = (
-                counted.groupBy(_C)
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("count")).alias("nc"), F.col(_V).alias("v")
-                        )
-                    ).alias("b")
-                )
-                .select(
-                    _C,
-                    F.col("b.v").alias(_V),
-                    (-F.col("b.nc")).alias("count"),
-                    F.lit(1).alias("__rn"),
-                )
-                .collect()
+            .groupBy(_C)
+            .agg(
+                F.min(
+                    F.struct((-F.col("count")).alias("nc"), F.col(_V).alias("v"))
+                ).alias("b")
             )
-        else:
-            w = Window.partitionBy(_C).orderBy(F.desc("count"), F.asc(_V))
-            grouped = counted.withColumn("__rn", F.row_number().over(w))
-            keep = F.col("__rn") == 1
-            if cat_base:
-                keep = keep | F.col(_C).isin(list(cat_base))
-            rows = grouped.filter(keep).collect()
-        by_col: dict[str, list[tuple[str, int]]] = {c: [] for c in cat_base}
-        top1: dict[str, str] = {}
-        for r in rows:
-            if r[_C] in by_col:
-                by_col[r[_C]].append((r[_V], r["count"]))
-            if r["__rn"] == 1 and r[_C] in mode_cols:
-                top1[r[_C]] = r[_V]
-        return by_col, top1
+            .collect()
+        )
+        return {r[_C]: r["b"]["v"] for r in rows}
 
     def _outlier_stats(
         self, df: DataFrame, cols: dict[str, Column]
     ) -> dict[str, tuple]:
-        pq = "percentile" if self.exact_stats else "approx_percentile"
-        named = df.select(
-            *[expr.alias(f"__etl_{c}") for c, expr in cols.items()]
-        )
-        aggs: list[Column] = []
-        for c in cols:
-            col = F.col(f"__etl_{c}")
-            aggs += [
-                F.avg(col).alias(f"{c}__mu"),
-                F.stddev_samp(col).alias(f"{c}__sd"),
-                F.expr(f"{pq}(`__etl_{c}`, array(0.05, 0.95))").alias(f"{c}__q"),
-            ]
-        row = named.agg(*aggs).collect()[0]
-        out = {}
-        for c in cols:
-            q = row[f"{c}__q"]
-            out[c] = (
-                row[f"{c}__mu"],
-                row[f"{c}__sd"],
-                q[0] if q else None,
-                q[1] if q else None,
-            )
-        return out
+        aggs = [a for c, expr in cols.items() for a in self._outlier_aggs(c, expr)]
+        return self._outlier_scalars(df.agg(*aggs).collect()[0].asDict(), cols)
 
     # -- R18 ---------------------------------------------------------------
 

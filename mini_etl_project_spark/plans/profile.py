@@ -3,17 +3,19 @@ ETL_PROJECT.py:16-41).
 
 The reference scans every column ~4 times with per-row Python. Here the
 whole profile is ONE wide aggregation job — per column: non-null count,
-exact distinct count, mean stringified length, date-parse successes
+distinct count, mean stringified length, date-parse successes
 (16-format chain), numeric-parse successes — and the driver applies the
 reference's strict threshold rules to produce a logical type per column.
 
 This two-phase profile→plan flow is the engine's core custom machinery
 (SURVEY.md §4.2): data-dependent typed plans, no custom Catalyst rules.
 
-Scale: one job, ~5 aggregates per column, all codegen'd. ``exact_distinct``
-can be switched off to use HLL (``approx_count_distinct``) at 100 TB —
+Scale: one job, ~5 aggregates per column, all codegen'd. Distinct counts
+are HLL (``approx_count_distinct``), partial-aggregable at 100 TB:
 detection only needs the distinct count near the 50 / 30 %-ratio
-boundaries, where HLL's ~2 % error is acceptable.
+boundaries, where HLL's ~2 % error is acceptable, and an exact
+multi-column COUNT(DISTINCT) would cost a whole extra job (an Expand that
+replicates the stream once per column).
 """
 
 from __future__ import annotations
@@ -66,87 +68,6 @@ class ColumnProfile:
         return UNKNOWN
 
 
-def profile_frame_and_count(
-    df: DataFrame, exact_distinct: bool = True
-) -> tuple[dict[str, ColumnProfile], int]:
-    """Profile every column; two jobs when ``exact_distinct``.
-
-    Multi-column COUNT(DISTINCT) compiles to an Expand (one replicated
-    stream per distinct column) that re-evaluates every other aggregate's
-    input expression per replica — with the parse-heavy profile exprs that
-    doubled the job's cost (measured). Exact distincts therefore run in
-    their own expression-free job; approx (HLL) distincts are partial-
-    aggregable and stay in the main job.
-    """
-    if exact_distinct:
-        drow = df.agg(
-            *[F.count_distinct(F.col(c)).alias(f"{c}__dc") for c in df.columns]
-        ).collect()[0]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in df.columns:
-        raw = F.col(c)
-        s = raw.cast("string")
-        distinct = (
-            F.lit(None).cast("long") if exact_distinct else F.approx_count_distinct(raw)
-        )
-        # Typed fast paths — semantically equal to the string-scan rules,
-        # minus the work. float/double stringify with a fractional part
-        # (".0" at minimum) so no date format can match → date_ok = 0 and
-        # numeric_ok = non_null. date/timestamp stringify as
-        # "yyyy-MM-dd[ HH:mm:ss]" → date_ok = non_null, numeric_ok = 0.
-        # Integer columns KEEP the date scan: 8-digit ints parse under
-        # yyyyMMdd, which the reference would detect as dates.
-        kind = df.schema[c].dataType.typeName()
-        # avg_len only matters for the text-type rule, which numeric/date
-        # typed columns can never reach (they pass an earlier rule at
-        # 100 %) — skip the cast-to-string length scan for them.
-        length_agg = F.avg(F.length(s))
-        if kind in ("double", "float", "decimal"):
-            date_ok = F.lit(0).cast("long")
-            num_ok = F.count(raw)
-            length_agg = F.lit(None).cast("double")
-        elif kind in ("date", "timestamp", "timestamp_ntz"):
-            date_ok = F.count(raw)
-            num_ok = F.lit(0).cast("long")
-            length_agg = F.lit(None).cast("double")
-        else:
-            from mini_etl_project_spark.functions.cleaning import (
-                guarded_try_double,
-                ws_trim,
-            )
-
-            # ws_trim (regexp \s strip), not F.trim (ASCII space only):
-            # pd.to_numeric accepts tab/newline-padded numerics, and the
-            # date branch already strips all whitespace.
-            date_ok = F.count(parse_date_multi(s))
-            num_ok = F.count(guarded_try_double(ws_trim(s)))
-        aggs += [
-            F.count(raw).alias(f"{c}__nn"),
-            distinct.alias(f"{c}__dc"),
-            length_agg.alias(f"{c}__len"),
-            date_ok.alias(f"{c}__date"),
-            num_ok.alias(f"{c}__num"),
-        ]
-    row = df.agg(*aggs).collect()[0]
-    profiles = {
-        c: ColumnProfile(
-            name=c,
-            non_null=row[f"{c}__nn"],
-            distinct=drow[f"{c}__dc"] if exact_distinct else row[f"{c}__dc"],
-            avg_len=row[f"{c}__len"],
-            date_ok=row[f"{c}__date"],
-            numeric_ok=row[f"{c}__num"],
-        )
-        for c in df.columns
-    }
-    return profiles, row["__rows"]
-
-
-def profile_frame(df: DataFrame, exact_distinct: bool = True) -> dict[str, ColumnProfile]:
-    """Profile every column in one aggregation job."""
-    return profile_frame_and_count(df, exact_distinct)[0]
-
-
 # -- single-scan profile: parse layer + regex-free aggregation -------------
 #
 # The profile's expensive expressions (the 16-format date chain, the
@@ -165,7 +86,6 @@ PD_PREFIX, PN_PREFIX, NC_PREFIX = "__pd__", "__pn__", "__nc__"
 
 def prepare_parse_frame(
     df: DataFrame,
-    compat: bool = True,
     date_cols: set[str] | None = None,
     numeric_cols: set[str] | None = None,
 ) -> tuple[DataFrame, list[str]]:
@@ -202,14 +122,14 @@ def prepare_parse_frame(
             exprs += [
                 parse_date_multi(s).alias(PD_PREFIX + c),
                 guarded_try_double(ws_trim(s)).alias(PN_PREFIX + c),
-                clean_numeric(c, compat=compat).alias(NC_PREFIX + c),
+                clean_numeric(c, compat=True).alias(NC_PREFIX + c),
             ]
         elif c in (date_cols or ()):
             parsed.append(c)
             exprs.append(parse_date_multi(s).alias(PD_PREFIX + c))
         elif c in (numeric_cols or ()):
             parsed.append(c)
-            exprs.append(clean_numeric(c, compat=compat).alias(NC_PREFIX + c))
+            exprs.append(clean_numeric(c, compat=True).alias(NC_PREFIX + c))
     return df.select(*exprs), parsed
 
 
@@ -267,3 +187,17 @@ def profile_prepared_and_count(
         for c in columns
     }
     return profiles, row["__rows"]
+
+
+def profile_frame_and_count(df: DataFrame) -> tuple[dict[str, ColumnProfile], int]:
+    """Profile every column and count the rows, in one aggregation job:
+    the parse layers of ``prepare_parse_frame`` aggregated by
+    ``profile_prepared_and_count`` (the unused ``__nc__`` layer is pruned
+    by the optimizer)."""
+    wide, parsed = prepare_parse_frame(df)
+    return profile_prepared_and_count(wide, df.columns, parsed)
+
+
+def profile_frame(df: DataFrame) -> dict[str, ColumnProfile]:
+    """Profile every column in one aggregation job."""
+    return profile_frame_and_count(df)[0]

@@ -370,9 +370,7 @@ def q_etl_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("l_shipdate", "dd/MM/yyyy").alias("ship"),
         F.col("l_returnflag").alias("flag"),
     )
-    pipe = AutoETLPipeline(
-        compat=True, eager_summary=False, assume_partitioned=True
-    )
+    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
     return pipe.transform(raw)
 
 
@@ -471,9 +469,7 @@ def q_etl_pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_id") % 10 == 0, F.col("event_id").cast("string"))
         .alias("junk"),
     )
-    pipe = AutoETLPipeline(
-        compat=True, eager_summary=False, assume_partitioned=True
-    )
+    pipe = AutoETLPipeline(eager_summary=False, assume_partitioned=True)
     return pipe.transform(raw)
 
 
@@ -487,7 +483,8 @@ def q_etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     The profile→plan machinery chooses types and cleaning at runtime; its
     semantics are pinned by the golden-parity and unit tests
     (tests/test_pipeline_golden.py, tests/test_cleaners.py); per-SF row
-    counts are pinned by tests/test_cleaners.py::test_pipeline_sf_rowcounts.
+    counts and output digests are pinned by
+    tests/test_round2.py::test_pipeline_sf_rowcounts.
 
     ``exact_stats=False`` is the 100 TB posture: approx medians/percentiles
     are partial-aggregable, so every stats job is a straight map-side-
@@ -503,7 +500,6 @@ def q_etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
     )
     pipe = AutoETLPipeline(
-        compat=True,
         eager_summary=False,
         exact_stats=False,
         assume_partitioned=True,  # load_table already widened the scan

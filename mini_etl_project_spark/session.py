@@ -14,6 +14,7 @@ Local mode is controlled by env vars so the driver/bench can steer it:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -86,8 +87,6 @@ def get_spark(app_name: str = "mini_etl_project_spark", cpus: str | None = None)
     ):
         # getOrCreate reused an already-started JVM; our memory config
         # silently no-ops there. Surface it instead of failing later.
-        import warnings
-
         warnings.warn(
             "get_spark: existing SparkSession has a 1g driver heap; "
             "SPARK_GRAFT_DRIVER_MEM was ignored (JVM already started)",
@@ -178,24 +177,33 @@ def eager_checkpoint_sized(df: DataFrame) -> tuple[DataFrame, int]:
     honest volume signal for sizing downstream shuffle width on bounded
     lanes (r13, guide §2.2): unlike the pre-checkpoint plan estimate it
     reflects the filters already applied, and unlike a count it costs no
-    extra job. Returns (checkpointed_df, bytes); bytes is 0 if the
-    storage info is unreadable (callers treat 0/tiny as width 1)."""
+    extra job. Returns (checkpointed_df, bytes); bytes is 0, with a
+    warning, if the storage info is unreadable (callers treat 0/tiny as
+    width 1)."""
     sc = df.sparkSession.sparkContext
     try:
         before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    except Exception:
-        before = None
+    except Exception as e:
+        _warn_storage_unreadable(e)
+        return df.localCheckpoint(eager=True), 0
     out = df.localCheckpoint(eager=True)
-    if before is None:
-        return out, 0
     try:
         return out, sum(
             i.memSize() + i.diskSize()
             for i in sc._jsc.sc().getRDDStorageInfo()
             if i.id() not in before
         )
-    except Exception:
+    except Exception as e:
+        _warn_storage_unreadable(e)
         return out, 0
+
+
+def _warn_storage_unreadable(e: Exception) -> None:
+    warnings.warn(
+        f"eager_checkpoint_sized: storage info unreadable ({e!r}); "
+        "reporting 0 bytes",
+        stacklevel=3,
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

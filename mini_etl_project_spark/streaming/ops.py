@@ -16,6 +16,7 @@ newer than the final watermark).
 from __future__ import annotations
 
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -241,7 +242,8 @@ def input_bytes(path: str) -> int | None:
     dev path), then the Hadoop FileSystem of the active session — so at
     real scale (object storage, HDFS) the volume signal comes from the
     file index instead of silently degrading to the session default
-    (VERDICT r12 ask #8). Returns None when the size is unknowable."""
+    (VERDICT r12 ask #8). Returns None, with a warning, when the size is
+    unknowable."""
     import os
 
     try:
@@ -262,7 +264,11 @@ def input_bytes(path: str) -> int | None:
         hpath = jvm.org.apache.hadoop.fs.Path(path)
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
         return fs.getContentSummary(hpath).getLength()
-    except Exception:
+    except Exception as e:
+        warnings.warn(
+            f"input_bytes: size of {path!r} unknowable ({e!r}); returning None",
+            stacklevel=2,
+        )
         return None
 
 

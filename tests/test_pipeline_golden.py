@@ -62,7 +62,7 @@ EXPECTED_TYPES = {
 def result(spark):
     import pandas as pd
 
-    pipe = AutoETLPipeline(compat=True)
+    pipe = AutoETLPipeline()
     df = pipe.transform(spark.createDataFrame(pd.DataFrame(DEMO)))
     rows = sorted(df.collect(), key=lambda r: r["id"])
     return pipe, df, rows

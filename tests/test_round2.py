@@ -5,6 +5,7 @@ tripwires (VERDICT r1 items 7 and 8)."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,21 +105,33 @@ def test_interval_join_open_bounds(spark):
     assert closed.count() == 1 and opened.count() == 0
 
 
-#: Pinned output row counts for the generic (rows-only) AutoETL query —
-#: the regression tripwire VERDICT r1 item 8 asked for.
-_PIPELINE_GOLDEN_COUNTS = {"0.001": 6000, "0.01": 59999, "0.1": 599995}
+#: Pinned output of the generic (rows-only) AutoETL query, per SF: the
+#: row count (the regression tripwire VERDICT r1 item 8 asked for) and the
+#: exact DECIMAL sum of each row's xxhash64 over its columns in name order
+#: — the order-free digest of perfbench/worker.py:spark_digest, so the pin
+#: holds values, not just rows, under any partitioning.
+_PIPELINE_GOLDEN = {
+    "0.001": (6000, -47338228782829331385),
+    "0.01": (59999, -1551165730359542292019),
+    "0.1": (599995, 2942333529802936120216),
+}
+
+
+def _pipeline_digest(spark, sf_dir: str, sf: str) -> tuple[int, int]:
+    from mini_etl_project_spark.queries import QUERIES
+
+    # the pinned SFs sit beside the suite's fixture directory
+    path = os.path.join(os.path.dirname(sf_dir), f"sf{sf}")
+    df = QUERIES["q_etl_pipeline"](spark, path)
+    h = F.xxhash64(*[F.col(c) for c in sorted(df.columns)]).cast("decimal(38,0)")
+    row = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).collect()[0]
+    return row["n"], int(row["h"])
 
 
 @pytest.mark.parametrize("sf", ["0.001", "0.01"])
-def test_pipeline_sf_rowcounts(spark, sf):
-    from mini_etl_project_spark.queries import QUERIES
-
-    n = QUERIES["q_etl_pipeline"](spark, f"/root/testdata/sf{sf}").count()
-    assert n == _PIPELINE_GOLDEN_COUNTS[sf]
+def test_pipeline_sf_rowcounts(spark, sf_dir, sf):
+    assert _pipeline_digest(spark, sf_dir, sf) == _PIPELINE_GOLDEN[sf]
 
 
-def test_pipeline_sf01_rowcount(spark):
-    from mini_etl_project_spark.queries import QUERIES
-
-    n = QUERIES["q_etl_pipeline"](spark, "/root/testdata/sf0.1").count()
-    assert n == _PIPELINE_GOLDEN_COUNTS["0.1"]
+def test_pipeline_sf01_rowcount(spark, sf_dir):
+    assert _pipeline_digest(spark, sf_dir, "0.1") == _PIPELINE_GOLDEN["0.1"]

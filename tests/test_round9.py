@@ -155,11 +155,11 @@ def test_approx_profile_matches_exact_pipeline(spark):
     from mini_etl_project_spark.plans.pipeline import AutoETLPipeline
 
     df = _typed_frame(spark)
-    exact = AutoETLPipeline(compat=True)
+    exact = AutoETLPipeline()
     out_exact = exact.transform(df)
     rows_exact = sorted(out_exact.collect(), key=lambda r: r["id"])
 
-    approx = AutoETLPipeline(compat=True, profile_sample_mod=4)
+    approx = AutoETLPipeline(profile_sample_mod=4)
     out_approx = approx.transform(df)
     rows_approx = sorted(out_approx.collect(), key=lambda r: r["id"])
 
@@ -211,7 +211,7 @@ def test_approx_profile_empty_sample_falls_back(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"id": [1], "amount": ["7.5"]})
     )
-    pipe = AutoETLPipeline(compat=True, profile_sample_mod=1_000_000_007)
+    pipe = AutoETLPipeline(profile_sample_mod=1_000_000_007)
     out = pipe.transform(df)
     assert out.count() == 1
     assert pipe.column_types["amount"] == "numeric"

@@ -1,15 +1,19 @@
-"""Round-12 measurement harness (guide §1: measure first).
+"""Plan-and-timing capture for a set of queries (guide §1: measure first).
 
 Captures, for each named query (default: the bench HEADLINE + extra lanes):
-  - .explain("formatted") → plans/r12/<name>_<tag>.txt
+  - .explain("formatted") → <out_dir>/<name>_<tag>.txt
   - warm-up + median-of-5 noop-sink timings (same protocol as bench.py)
 
-Usage: python tools/measure_r12.py <tag> [query ...]
-Writes one JSON line with the timings; plans land in plans/r12/.
+Usage: python tools/measure_plans.py <out_dir> <tag> [query ...]
+Writes one JSON line with the timings; plans land in <out_dir> (e.g.
+plans/r13). The fixture directory comes from SPARK_GRAFT_SF_DIR, with
+the same sf0.1 default as bench.py.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import statistics
@@ -20,6 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_etl_project_spark.queries import QUERIES
 from mini_etl_project_spark.session import get_spark
+
+USAGE = "usage: python tools/measure_plans.py <out_dir> <tag> [query ...]"
 
 DEFAULT = [
     "q01_pricing_summary",
@@ -37,35 +43,31 @@ DEFAULT = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or DEFAULT
+    if len(sys.argv) < 3 or any(n not in QUERIES for n in sys.argv[3:]):
+        print(USAGE, file=sys.stderr)
+        print(f"queries: {', '.join(sorted(QUERIES))}", file=sys.stderr)
+        sys.exit(1)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r12",
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("measure_r12")
+    spark = get_spark("measure_plans")
     results: dict[str, float] = {}
     for name in names:
-        if name not in QUERIES:
-            continue
-        spark.sparkContext.setJobDescription(f"r12-measure: {name}")
+        spark.sparkContext.setJobDescription(f"measure-plans {tag}: {name}")
         df = QUERIES[name](spark, sf_dir)
-        import contextlib
-        import io
-
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(buf.getvalue())
+
         def once() -> float:
             t0 = time.time()
             d = QUERIES[name](spark, sf_dir)
             d.write.format("noop").mode("overwrite").save()
             return time.time() - t0
+
         once()  # warm-up
         results[name] = round(statistics.median(once() for _ in range(5)), 4)
         spark.sparkContext.setJobDescription(None)

@@ -2,6 +2,8 @@
 
 Usage: python tools/time_one.py <query_name> [n_runs] [sf_dir]
 Prints per-run seconds and the median. Same noop-sink action as bench.py.
+A missing or unknown query name, or a run count that is not a positive
+integer, prints the usage line and the registered query names and exits 1.
 """
 import os
 import statistics
@@ -13,13 +15,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from mini_etl_project_spark.queries import QUERIES
 from mini_etl_project_spark.session import get_spark
 
+USAGE = "usage: python tools/time_one.py <query_name> [n_runs] [sf_dir]"
 
-def main() -> None:
-    name = sys.argv[1]
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
+
+def parse_args(argv: list[str]) -> tuple[str, int, str] | None:
+    """(name, n_runs, sf_dir), or None when the arguments are invalid."""
+    if not argv or argv[0] not in QUERIES:
+        return None
+    try:
+        n = int(argv[1]) if len(argv) > 1 else 5
+    except ValueError:
+        return None
+    if n < 1:
+        return None
+    sf_dir = argv[2] if len(argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
+    return argv[0], n, sf_dir
+
+
+def main() -> None:
+    args = parse_args(sys.argv[1:])
+    if args is None:
+        print(USAGE, file=sys.stderr)
+        print(f"queries: {', '.join(sorted(QUERIES))}", file=sys.stderr)
+        sys.exit(1)
+    name, n, sf_dir = args
     spark = get_spark("time_one")
     spark.sparkContext.setJobDescription(f"time_one:{name}")
     ts = []
